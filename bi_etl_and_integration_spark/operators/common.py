@@ -24,3 +24,13 @@ def materialize(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks behind a frame returned by :func:`materialize`.
+    ``DataFrame.unpersist`` only drops CacheManager entries, and a
+    checkpointed frame is not one: its blocks belong to the RDD inside
+    its ``LogicalRDD`` plan, which stays persisted until the JVM's
+    ContextCleaner happens to collect it.  ``df`` must not be read
+    afterwards (local checkpoints have no lineage to recompute from)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bi_etl_and_integration_spark.operators.common import (
-    materialize as _materialize)
+    materialize as _materialize, release as _release)
 
 
 def merge_apply(target: DataFrame, source: DataFrame, keys: Sequence[str],
@@ -222,6 +222,7 @@ def flatten_hierarchy(edges: DataFrame, id_col: str = "id",
         # spill gone); the hash build is one state-partition of (id,
         # anc, path) rows — bounded by the same partition sizing SMJ
         # needs anyway
+        prev = state
         state = _materialize(
             state.join(anc.hint("shuffle_hash"),
                        state["anc"] == F.col("__aid"), "left")
@@ -236,6 +237,10 @@ def flatten_hierarchy(edges: DataFrame, id_col: str = "id",
                 # the root of its own subtree (documented above)
                 (resolved | ~hit
                  | F.coalesce(F.col("__adone"), F.lit(False))).alias("done")))
+        # the new round is materialized and cut from prev's lineage, so
+        # prev's blocks are dead; the last round backs the returned
+        # frame and stays
+        _release(prev)
     unresolved = state.where(~F.col("done"))
     if not unresolved.isEmpty():
         sample = [r["id"] for r in unresolved.select("id").head(5)]

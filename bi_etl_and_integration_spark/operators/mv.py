@@ -26,6 +26,7 @@ import os
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from bi_etl_and_integration_spark.operators.aggregate import (
     merge_state_tables, merge_states, partial_states)
@@ -67,12 +68,22 @@ class IncrementalAggMV:
     def compact(self, spark: SparkSession) -> None:
         """Fold every delta into a single state set.  The merged result
         is itself a valid state table (sums of sums), so compaction and
-        incremental appends compose indefinitely."""
+        incremental appends compose indefinitely.
+
+        Each state column is written back with the deltas' own type:
+        SUM widens a DECIMAL(p,s) to DECIMAL(p+10,s), and a compacted
+        file of the wider type next to later narrow deltas makes the
+        directory unreadable (PARQUET_COLUMN_DATA_TYPE_MISMATCH).  Under
+        ANSI mode (Spark 4's default) a total that no longer fits the
+        delta type fails the cast instead of being written."""
         from bi_etl_and_integration_spark.pipeline import (
             checkpointed_write)
-        merged = merge_state_tables(self._states(spark), self.keys,
-                                    list(self.measures))
-        checkpointed_write(merged, self.path)
+        states = self._states(spark)
+        merged = merge_state_tables(states, self.keys, list(self.measures))
+        checkpointed_write(
+            merged.select(*[F.col(f.name).cast(f.dataType)
+                            for f in states.schema.fields]),
+            self.path)
 
     def n_delta_files(self) -> int:
         return len([f for f in os.listdir(self.path)

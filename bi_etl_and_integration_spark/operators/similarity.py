@@ -73,23 +73,6 @@ def cosine_similarity_udf():
     return cos
 
 
-def with_l2_normalized(df: DataFrame, vec_col: str,
-                       out_col: str) -> DataFrame:
-    """Add a unit-L2 copy of ``vec_col`` (double elements).
-
-    Normalizing ONCE per row turns every later cosine into a single
-    dot pass — the higher-order-function norm is the interpreted slow
-    path, so paying it per row instead of per candidate pair is the
-    difference between O(n) and O(n·candidates) interpreter calls.
-    Zero vectors map to zero vectors (cosine 0 downstream)."""
-    return (df.withColumn("__l2", F.greatest(norm(F.col(vec_col)),
-                                             F.lit(1e-12)))
-            .withColumn(out_col, F.transform(
-                F.col(vec_col),
-                lambda x: x.cast("double") / F.col("__l2")))
-            .drop("__l2"))
-
-
 _MAX_QUERY_ROWS = 10_000
 """Default brute_force_topk query-side cap: the contract is a SMALL
 probe batch (the query set is broadcast/collected), and beyond ~10k

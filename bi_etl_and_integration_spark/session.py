@@ -130,6 +130,23 @@ def _builder(app_name: str, master: str | None, shuffle_partitions: int,
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
+        # -- case mapping: Spark 4.1's default (ICU on) makes the first
+        #    upper()/lower() in a JVM run CollationAwareUTF8String's
+        #    static initializer, which calls ICU toTitleCase for all
+        #    1,114,112 code points — even for all-ASCII input — and
+        #    concurrent tasks block on that class-init lock.  Off, the
+        #    UTF8_BINARY upper/lower take Spark's JVM mapper (ASCII fast
+        #    path, then String.toUpperCase/toLowerCase).  Measured on a
+        #    4-core host, cold JVM: first upper() over 1,500 ASCII rows
+        #    4.0-4.6 s -> 0.46 s CPU; q08 4.65 -> 0.48 s, x27 7.28 ->
+        #    3.55 s.  upper/lower differ only on the 67 code points
+        #    whose case mappings postdate JDK 17's Unicode 13 tables
+        #    (e.g. U+A7C0-U+A7DC, U+1C89, U+2C2F), and initcap also on
+        #    one-to-many title cases; the engine never calls initcap.
+        #    The JVM mapper uses the default locale for non-ASCII
+        #    strings, so get_session refuses tr/az/lt locales
+        #    (_check_case_locale)
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         # -- cost-based optimizer: consumes ANALYZE TABLE statistics
         #    (sources.writers.analyze_table) for join reordering on
         #    multi-join marts; inert for tables without stats
@@ -165,7 +182,31 @@ def get_session(app_name: str = "bi-etl-spark",
     """
     if master is None and not os.environ.get("SPARK_MASTER"):
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    return _builder(app_name, master, shuffle_partitions, extra_conf).getOrCreate()
+    spark = _builder(app_name, master, shuffle_partitions,
+                     extra_conf).getOrCreate()
+    _check_case_locale(
+        spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage())
+    return spark
+
+
+_LOCALE_SENSITIVE_CASE = frozenset({"tr", "az", "lt"})
+"""Languages whose ``String.toUpperCase``/``toLowerCase`` rules differ
+from the root locale (dotted/dotless i, Lithuanian dot-above)."""
+
+
+def _check_case_locale(language: str) -> None:
+    """Fail loudly when the JVM's default locale would change what
+    upper()/lower() return: with ICU case mappings off, non-ASCII
+    strings are mapped with ``Locale.getDefault()``.  Only the driver
+    JVM is checked (in local mode it is also the executor); a cluster
+    deploy pins executor locales in its own JVM options."""
+    if language in _LOCALE_SENSITIVE_CASE:
+        raise RuntimeError(
+            f"JVM default locale language {language!r} changes "
+            "upper()/lower() results for non-ASCII strings; start the "
+            "JVM with -Duser.language=en (e.g. "
+            "spark.driver.extraJavaOptions / "
+            "spark.executor.extraJavaOptions)")
 
 
 def stop_session() -> None:

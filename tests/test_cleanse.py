@@ -17,13 +17,42 @@ def test_cast_with_quarantine(rows):
     assert good.where(F.col("id") == 1).collect()[0]["n"] == 42
 
 
-def test_character_map(rows):
+# (input, upper, lower) as Spark's ICU case mappings return them;
+# the session runs with them off, and the JVM mapper must agree
+_CASE_ROWS = [
+    ("straße", "STRASSE", "straße"),
+    # final sigma: Σ lower-cases to ς at a word end, σ elsewhere
+    ("ΟΔΥΣΣΕΥΣ σίσυφος", "ΟΔΥΣΣΕΥΣ ΣΊΣΥΦΟΣ", "οδυσσευς σίσυφος"),
+    ("İstanbul ıi", "İSTANBUL II", "i\u0307stanbul ıi"),
+    ("ÀÉÎõü", "ÀÉÎÕÜ", "àéîõü"),
+]
+
+
+def test_character_map(spark, rows):
     df = rows([("MiXeD", "abc")], "a string, b string")
     out = cl.character_map(df, {"a": "upper", "b": "translate:abc:xyz"})
     r = out.collect()[0]
     assert r["a"] == "MIXED" and r["b"] == "xyz"
     with pytest.raises(ValueError):
         cl.character_map(df, {"a": "nope"})
+    words = rows([(w, w) for w, _, _ in _CASE_ROWS], "u string, l string")
+    want = [(u, lo) for _, u, lo in _CASE_ROWS]
+    key = "spark.sql.icu.caseMappings.enabled"
+    saved = spark.conf.get(key)
+    try:
+        for icu in ("true", "false"):
+            spark.conf.set(key, icu)
+            got = cl.character_map(words, {"u": "upper", "l": "lower"})
+            assert [tuple(r) for r in got.collect()] == want, icu
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_case_locale_guard():
+    from bi_etl_and_integration_spark.session import _check_case_locale
+    _check_case_locale("en")
+    with pytest.raises(RuntimeError, match="-Duser.language=en"):
+        _check_case_locale("tr")
 
 
 def test_audit_columns(rows):

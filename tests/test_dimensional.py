@@ -149,6 +149,21 @@ def test_flatten_hierarchy_forest_and_orphans(rows):
     assert out[51]["root_id"] == 50 and out[51]["path"] == [50, 51]
 
 
+def test_flatten_hierarchy_keeps_only_last_round_persisted(spark, rows):
+    """Each doubling round's checkpoint is released once the next round
+    is materialized; only the round backing the result stays."""
+    from bi_etl_and_integration_spark.operators.dimensional import (
+        flatten_hierarchy)
+    edges = rows([(i, i - 1 if i > 0 else None) for i in range(20)],
+                 "id long, parent_id long")
+    jsc = spark.sparkContext._jsc
+    for _ in range(2):
+        before = jsc.getPersistentRDDs().size()
+        out = flatten_hierarchy(edges)
+        assert out.count() == 20
+        assert jsc.getPersistentRDDs().size() - before <= 1
+
+
 def test_flatten_hierarchy_cycle_raises(rows):
     from bi_etl_and_integration_spark.operators.dimensional import (
         flatten_hierarchy)

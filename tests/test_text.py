@@ -115,6 +115,9 @@ def test_bm25_rank_orders_by_relevance(rows):
     assert scores[1] > scores[4] > scores[2]    # tf dominates, len norm
     top1 = tx.bm25_rank(docs, ["spark"], topk=1).collect()
     assert [r["doc_id"] for r in top1] == [1]
+    # a repeated query term (after lower-casing) counts once
+    dup = tx.bm25_rank(docs, ["spark", "spark", "SPARK"]).collect()
+    assert {r["doc_id"]: r["bm25_score"] for r in dup} == scores
 
 
 def test_bm25_rank_single_pass_reference_values_and_plan(rows):
