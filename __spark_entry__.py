@@ -19,21 +19,33 @@ from bi_etl_and_integration_spark.queries import ORACLE, QUERIES
 # (CORRECTNESS_r01/r02 each stopped at entry 50 — `_ordered()` below
 # self-rotates the window onto whatever still lacks a verdict).
 # After round 9 every declared query holds a cumulative verdict
-# (178 hash-green, 2 rows-only by SURVEY §2.12 declaration).  Round 11
-# changed PLANS (same output) for: the optimization round's
-# dedup/similarity family (spread exchange, InferFiltersFromGenerate
-# exclusion, join-strategy crossover, union-by-sizes verify:
-# x02*/x03/x04/x34*/x36*/x42/x43*), q14/q47 (customer-grain bucketed
-# staging), the staging helper shared by q43/q45/q13b, and the IVF
-# sidecar cache behind x44/x44b/x44c — all front-loaded for fresh
-# verdicts.
+# (178 hash-green, 2 rows-only by SURVEY §2.12 declaration), so the
+# window goes to queries whose physical plan or operator lifetime
+# changed since their last verdict (same output expected):
+#   - the one input-spread rule (``relational.spread_for_compute``
+#     replaced a round-robin small-input repartition helper and the
+#     per-query size-floor overrides): q07 q36 x08 x09 x13 x14 x18
+#     x19 x20 x23 x24 x27;
+#   - plans changed in round 12 that no window has verified yet:
+#     x26 (single-pass BM25), x33 (persisted candidates), q17b
+#     (as-of join without the pre-aggregate);
+#   - fuzzy grouping / star connected components now release each
+#     superseded round's checkpoint: q24b q24c.
+# The rest keeps the dedup/similarity and staging families warm.
 # ``_VERIFY_FIRST`` is only the TIE-BREAK order within the groups;
 # EXACTLY 50 names (pinned by tests/test_entry_window.py).
 _VERIFY_FIRST = [
-    # plans changed in round 11 (same output) — fresh verdicts first:
-    # the optimization round's dedup/similarity family (spread
-    # exchange, InferFiltersFromGenerate exclusion, join crossover,
-    # union-by-sizes) ...
+    # the one input-spread rule
+    "q07_cast_quarantine", "q36_error_tolerant_load",
+    "x08_text_quality", "x09_text_langid", "x13_heavy_hitters",
+    "x14_chunking", "x18_quality_filter", "x19_repetition_features",
+    "x20_contamination_check", "x23_segment_dedup",
+    "x24_boilerplate_removal", "x27_url_dedup",
+    # round-12 plan changes still without a verdict
+    "x26_bm25_search", "x33_hybrid_rrf", "q17b_asof_join",
+    # checkpoint release in the iterative component rounds
+    "q24b_fuzzy_grouping", "q24c_fuzzy_grouping_cc",
+    # dedup/similarity family (spread exchange, join crossover)
     "x43_incremental_dedup", "x43b_incremental_dedup_append",
     "x02_dedup_minhash", "x02b_dedup_minhash_multiprobe",
     "x03_dedup_simhash", "x04_dedup_ngram",
@@ -41,32 +53,20 @@ _VERIFY_FIRST = [
     "x34_semantic_dedup", "x34b_semantic_dedup_arrow",
     "x34c_semantic_dedup_coarse",
     "x36_dedup_canonical", "x36b_dedup_keep_longest",
-    # ... and the interrupted build session's staging queries
+    # session-staged bucketed facts and the IVF sidecar cache
     "q14_mart_cte_cascade", "q47_lateral_topk",
     "q43_shipping_topk", "q45_returned_items", "q13b_bucketed_join",
     "x44c_ann_ivfadc_persisted", "x44b_ann_ivf_append",
     "x44_ann_ivf_persisted",
-    # round-9/10 changed set, kept warm one more round
-    "x08_text_quality", "x27_url_dedup", "x38_url_parts",
-    "q24b_fuzzy_grouping", "q24c_fuzzy_grouping_cc",
     # high-value carry-overs worth keeping warm
     "q39_term_extraction", "q39b_term_lookup",
-    "x26_bm25_search",
     "q51_hierarchy_flatten",
     "q41d_stateful_sessionize", "x41_jpeg_features", "q64_with_totals",
     # corpus-curation block (operators/curation.py)
-    "x17_pii_redaction", "x18_quality_filter", "x19_repetition_features",
-    "x20_contamination_check", "x21_domain_mix", "x22_split_assignment",
-    "x23_segment_dedup", "x24_boilerplate_removal",
-    # oracle-bearing LLM extensions (incl. the scale-set dedup
-    # flagship family — sf1/sf10 fixtures regenerated this round,
-    # so keep their sf0.01 verdicts fresh)
+    "x17_pii_redaction", "x21_domain_mix", "x22_split_assignment",
+    "x38_url_parts", "x39_curation_pipeline",
+    # oracle-bearing LLM extensions
     "x29_stratified_exact_sample", "x30_semantic_clusters",
-    "x32_weighted_sample", "x33_hybrid_rrf",
-    "x35_normalize_text", "x37_sum_map",
-    "x39_curation_pipeline", "x40_standardize",
-    # ClickHouse-parity analytics
-    "q53b_outliers_iqr", "q57_sessionize",
 ]
 
 

@@ -34,10 +34,6 @@ from bi_etl_and_integration_spark.operators.relational import (
 _P = 2_147_483_647  # Mersenne prime 2^31-1 for the minhash hash family
 
 
-# shared scale-adaptive input spread (defined with the relational
-# operators; used here before every CPU-heavy shingle/window pass)
-_spread_for_compute = spread_for_compute
-
 #: source-size window inside which a band join side gets the static
 #: SHUFFLE_HASH hint (see _shj_if_big).  Below the floor AQE's
 #: broadcast upgrade is the right plan; above the CEILING the hint is
@@ -215,7 +211,7 @@ def minhash_lsh_dedup(df: DataFrame, text_col: str = "text",
        multi-probe the band windows could straddle probe families);
        callers with odd combinations must pick num_hashes = r x bands.
     """
-    base = (_spread_for_compute(df, id_col)
+    base = (spread_for_compute(df, id_col)
             .select(F.col(id_col).alias("id"),
                     hashed_shingles(F.col(text_col), shingle_n)
                     .alias("__hs")).persist())  # consumed 3x (sig + verify)
@@ -296,7 +292,7 @@ def minhash_index(df: DataFrame, text_col: str = "text",
     ``params`` and raises on mismatch (a silent mismatch would
     collapse recall to ~0, not error).  Fold a deduped batch's
     survivors back in with :func:`minhash_index_append`."""
-    base = (_spread_for_compute(df, id_col)
+    base = (spread_for_compute(df, id_col)
             .select(F.col(id_col).alias("id"),
                     hashed_shingles(F.col(text_col), shingle_n)
                     .alias("__hs")))
@@ -324,7 +320,7 @@ def minhash_index_append(index: MinhashIndex, df: DataFrame,
     (signature mins over the doc's own shingles — corpus-independent),
     so union-of-bandings == banding-of-union."""
     p = index.params
-    base = (_spread_for_compute(df, id_col)
+    base = (spread_for_compute(df, id_col)
             .select(F.col(id_col).alias("id"),
                     hashed_shingles(F.col(text_col), p.shingle_n)
                     .alias("__hs")))
@@ -370,7 +366,7 @@ def minhash_lookup(df: DataFrame, index: MinhashIndex,
                 "silently collapses recall to ~0; pass the index's "
                 "params (or rely on its defaults)")
     idx_buckets, idx_shingles = index[0], index[1]
-    base = (_spread_for_compute(df, id_col)
+    base = (spread_for_compute(df, id_col)
             .select(F.col(id_col).alias("id"),
                     hashed_shingles(F.col(text_col), shingle_n)
                     .alias("__hs")).persist())  # banding + verify
@@ -528,7 +524,7 @@ def ngram_jaccard_dedup(df: DataFrame, text_col: str = "text",
     variant of minhash_lsh_dedup for modest corpora / audits)."""
     blk = block if block is not None else F.xxhash64(
         F.slice(tokenize(F.col(text_col)), 1, n))
-    base = (_spread_for_compute(df, id_col)
+    base = (spread_for_compute(df, id_col)
             .select(F.col(id_col).alias("id"),
                     hashed_shingles(F.col(text_col), n).alias("sh"),
                     blk.alias("blk")).persist())  # both sides of self-join
@@ -608,13 +604,13 @@ def exact_jaccard_join(df: DataFrame, text_col: str = "text",
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    base = (_spread_for_compute(df, id_col)
+    base = (spread_for_compute(df, id_col)
             .select(F.col(id_col).alias("id"),
                     hashed_shingles(F.col(text_col), n).alias("__hs"),
                     F.lit(0).alias("__side")))
     if other is not None:
         base = base.unionByName(
-            _spread_for_compute(other, id_col)
+            spread_for_compute(other, id_col)
             .select(F.col(id_col).alias("id"),
                     hashed_shingles(F.col(text_col), n).alias("__hs"),
                     F.lit(1).alias("__side")))
@@ -937,7 +933,7 @@ def substring_dedup(df: DataFrame, text_col: str = "text",
     t, i = text_col, id_col
     # window hashing is the CPU-heavy pass (len/stride substrings +
     # xxhash each): spread it when the source can't split (guide §2.5)
-    src = _spread_for_compute(df.select(i, t), i)
+    src = spread_for_compute(df.select(i, t), i)
     wins = (src.select(
         F.col(i),
         F.explode(F.expr(

@@ -24,9 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
 from bi_etl_and_integration_spark.operators.common import (
-    materialize as _materialize)
+    materialize as _materialize, release as _release)
 
 
 def similarity(a: Column, b: Column) -> Column:
@@ -199,6 +198,9 @@ def connected_components(edges: DataFrame, src: str = "src",
     for _ in range(max_iter):
         nxt = _materialize(_small_star(_large_star(e)))
         changed = nxt.exceptAll(e).limit(1).count()
+        # nxt is cut from e's lineage, so the superseded round's
+        # blocks are dead; the last round backs the result and stays
+        _release(e)
         e = nxt
         if changed == 0:
             break
@@ -370,13 +372,9 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
             # checkpoint dir is set, localCheckpoint otherwise —
             # ADVICE r6): without truncation the iterative lineage
             # makes Catalyst re-analyze a deeper plan every wave (the
-            # dominant cost, not the data).
-            # Storage note: superseded snapshots (2 longs x |domain|,
-            # MEMORY_AND_DISK) are released by the ContextCleaner as
-            # their references drop at reassignment — worst case
-            # O(log diameter) live snapshots, spillable; the previous
-            # persist/unpersist freed each round deterministically
-            # but paid the growing-lineage re-analysis instead.
+            # dominant cost, not the data).  Each superseded snapshot
+            # (2 longs x |domain|) is released once the next round is
+            # materialized and compared; only the last round stays.
             hop = stepped.select(F.col("id").alias("label"),
                                  F.col("label").alias("label2"))
             new_labels = (stepped.join(hop, "label", "left")
@@ -390,6 +388,7 @@ def fuzzy_grouping(df: DataFrame, key: str, col: str, *,
                        .join(labels.withColumnRenamed("label", "old"), "id")
                        .where(F.col("label") != F.col("old"))
                        .limit(1).count())
+            _release(labels)
             labels = new_labels
             if changed == 0:
                 break

@@ -20,52 +20,65 @@ from pyspark.sql.window import Window
 ColumnLike = Column | str
 
 #: spread_for_compute source-size floor: below this many bytes the
-#: exchange costs more than the serial pass it parallelizes (VERDICT
-#: r11 item 3, measured on the driver's sf0.1 fixtures: x42 went
-#: 0.68 -> 1.07 s when the spread fired on a 0.6 MB documents file;
-#: at 6 MB/50k docs the spread is a clear win — shingle passes there
-#: run seconds serial vs ~0.1 s exchange).  4 MB sits between those
-#: two measured regimes; env-overridable for bench experiments.
-_SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES",
-                                       str(4 * 1024 * 1024)))
+#: exchange costs more than the serial pass it parallelizes (measured
+#: on the sf0.1 fixtures: x42 went 0.68 -> 1.07 s when the spread
+#: fired on a 0.6 MB documents file; at 6 MB/50k docs the spread is a
+#: clear win — shingle passes there run seconds serial vs ~0.1 s
+#: exchange).  4 MB sits between those two measured regimes.
+_SPREAD_MIN_BYTES = 4 * 1024 * 1024
 
 
-def spread_for_compute(df: DataFrame, id_col: str, *,
-                       min_bytes: int | None = None) -> DataFrame:
-    """Scale-adaptive input spread for CPU-heavy per-row passes
-    (shingling, window hashing, embedding folds): when the source's
-    scan parallelism is below the session's core count — a single
-    parquet file with one or a few row groups cannot be split
-    further; every split beyond the row-group count is EMPTY (a split
-    gets the row groups whose midpoint falls in its range), so the
-    whole compute pass serializes onto 1-5 tasks — pay one cheap hash
-    exchange of the raw input rows to fan the compute out across all
-    cores (the optimization-guide remedy for input skew: "one huge
-    unsplittable file … repartition immediately after the read").
+def _row_groups(files: list[str], enough: int) -> int | None:
+    """Row groups across ``files``, counted until ``enough`` is
+    reached; None when any file is not parquet (row-splittable, so the
+    split count is the truth).  A ``.parquet`` file whose footer
+    cannot be read counts as one unsplittable row group."""
+    import pyarrow.parquet as pq
+    rgs = 0
+    for f in files:
+        path = f.removeprefix("file:")
+        if not path.endswith(".parquet"):
+            return None
+        try:
+            rgs += pq.ParquetFile(path).metadata.num_row_groups
+        except (OSError, ValueError):  # remote path / corrupt footer
+            rgs += 1
+        if rgs >= enough:
+            break
+    return rgs
 
-    Hash-partitioned on ``id_col`` (deterministic under task retry,
-    and no sortBeforeRepartition pass, unlike round-robin).  Guarded
-    three ways (all no-op paths — the spread only fires when every
-    guard agrees the compute would otherwise serialize):
+
+def spread_for_compute(df: DataFrame, id_col: str) -> DataFrame:
+    """The engine's one input-spread rule, applied before CPU-heavy
+    per-row passes (tokenizing, regex chains, JSON parsing, shingling,
+    window hashing, embedding folds).  A single parquet file with one
+    or a few row groups cannot be split further — every split beyond
+    the row-group count is EMPTY (a split gets the row groups whose
+    midpoint falls in its range) — so the whole compute pass would
+    serialize onto 1-5 tasks.  The spread pays one hash exchange of
+    the raw input rows to fan the compute out across all cores (the
+    optimization-guide remedy for input skew: "one huge unsplittable
+    file … repartition immediately after the read").
+
+    Hash-partitioned on ``id_col``: deterministic under task retry,
+    and no sortBeforeRepartition pass, unlike round-robin.  The spread
+    fires only when all three checks say the compute would serialize:
 
       - file count: >= core-count whole files is production-shaped
         input, no exchange needed;
-      - source size: below ``min_bytes`` (default
-        ``_SPREAD_MIN_BYTES``) the exchange costs more than the
-        serial pass it parallelizes (VERDICT r11 item 3 — x42 at the
-        0.6 MB sf0.1 fixture regressed 0.68 -> 1.07 s);
-      - split count AND footer row-group count: split count lies for
-        few-row-group files (splits beyond the row-group count are
-        empty), so both must clear the core count.  When the
-        row-group count is unknowable (in-memory frames, non-parquet
-        sources) the SPLIT count alone decides (ADVICE r11: CSV/JSON
-        and createDataFrame inputs are row-splittable, so an
-        already-parallel frame must stay a no-op).
+      - source size: below ``_SPREAD_MIN_BYTES`` (4 MB) the exchange
+        costs more than the serial pass it parallelizes;
+      - split count AND footer row-group count: the split count lies
+        for few-row-group files, so both must clear the core count.
+        A ``.parquet`` file with an unreadable footer counts as
+        unsplittable.  Non-parquet files (CSV/JSON are row-splittable)
+        and in-memory frames have no row groups, so the split count
+        alone decides there and an already-parallel frame stays a
+        no-op.
 
-    Measured (r11, sf10 one-file fixtures): minhash corpus banding
+    Measured (sf10 one-file fixtures): minhash corpus banding
     13.3 -> 2.8 s; x43 bench shape 61.6 -> 9.4 s same digest."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
+    p = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — exotic sources: assume files
@@ -73,29 +86,16 @@ def spread_for_compute(df: DataFrame, id_col: str, *,
     if files is not None and len(files) >= p:
         return df  # enough whole files to parallelize — no-op
     if files:
-        floor = _SPREAD_MIN_BYTES if min_bytes is None else min_bytes
         try:
             nbytes = sum(os.path.getsize(f.removeprefix("file:"))
                          for f in files)
         except OSError:  # remote FS: size unknowable, fall through
             nbytes = None
-        if nbytes is not None and nbytes < floor:
+        if nbytes is not None and nbytes < _SPREAD_MIN_BYTES:
             return df  # tiny source: serial pass beats the exchange
     splits = df.rdd.getNumPartitions()
-    rgs: int | None = 0
-    for f in files or []:
-        try:
-            import pyarrow.parquet as pq
-            path = f.removeprefix("file:")
-            rgs += pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:  # noqa: BLE001 — non-parquet/remote footer
-            rgs = None
-            break
-        if rgs >= p:
-            break
-    if rgs is None or not files:
-        rgs = splits  # row-splittable or unknowable: trust splits
-    if min(splits, rgs) >= p:
+    rgs = _row_groups(files, p) if files else None
+    if splits >= p and (rgs is None or rgs >= p):
         return df
     return df.repartition(p, F.col(id_col))
 
@@ -366,23 +366,6 @@ def except_(left: DataFrame, right: DataFrame, all: bool = False) -> DataFrame:
 
 
 # --------------------------------------------------- sort/top-k/sample
-
-def ensure_min_parallelism(df: DataFrame,
-                           min_partitions: int | None = None) -> DataFrame:
-    """Small-input adapter for CPU-heavy downstream work (JSON parse,
-    regex, UDF): repartition ONLY when the scan yields fewer partitions
-    than cores.  A single-row-group parquet file (the small-SF fixture
-    shape) otherwise serializes a whole-stage parse on one thread.
-
-    100 TB no-op by construction: real inputs carry thousands of row
-    groups, getNumPartitions >= cores, and no shuffle is added — the
-    repartition branch only exists below ~one row group per core."""
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_partitions:
-        return df.repartition(min_partitions)
-    return df
-
 
 def sort(df: DataFrame, *cols) -> DataFrame:
     """Full sort (PRO/Глава 05:78) — range-partitioned total order."""

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bi_etl_and_integration_spark.operators.common import (
+    materialize, release)
 from bi_etl_and_integration_spark.operators.fuzzy import STOPWORDS, tokenize
 
 #: tiny per-language marker lexicons (n-gram-heuristic stand-in; a real
@@ -430,8 +432,9 @@ def bpe_train(docs: DataFrame, *, text_col: str = "text",
     best pair collected to the driver (count desc, then lexicographic
     — fully deterministic), and the merge applied with a left-to-right
     greedy array fold (the published replacement order), state
-    localCheckpoint'd per round so the analyzer never sees a growing
-    plan.  Both paths implement the identical algorithm and tie-break
+    materialized per round so the analyzer never sees a growing plan
+    (each superseded round is released as the next one lands).  Both
+    paths implement the identical algorithm and tie-break
     (regression-tested against each other); the driver ends up holding
     ONLY the merge table either way.
 
@@ -454,10 +457,10 @@ def bpe_train(docs: DataFrame, *, text_col: str = "text",
         wf = {r["__w"]: r["__freq"] for r in vocab.collect()}
         return _bpe_train_vocab(wf, n_merges, min_pair_count)
     # split into character symbols + explicit end-of-word marker
-    state = vocab.select(
+    state = materialize(vocab.select(
         F.concat(F.split(F.col("__w"), ""),
                  F.array(F.lit("</w>"))).alias("__syms"),
-        F.col("__freq")).localCheckpoint(eager=True)
+        F.col("__freq")))
 
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -486,8 +489,11 @@ def bpe_train(docs: DataFrame, *, text_col: str = "text",
                 F.concat(F.slice(acc, 1, F.size(acc) - 1),
                          F.array(F.concat(la, lb))))
             .otherwise(F.concat(acc, F.array(s))))
-        state = (state.withColumn("__syms", merged)
-                 .localCheckpoint(eager=True))
+        prev = state
+        state = materialize(state.withColumn("__syms", merged))
+        release(prev)
+    # only the merge table leaves this function: free the last round
+    release(state)
     return merges
 
 
@@ -650,7 +656,6 @@ def concat_chunk_pack(df: DataFrame, count_col: str, order_col: str, *,
     # and an unmaterialized plan would re-run the range exchange when
     # the result is consumed (shared operators.common.materialize —
     # reliable checkpoint when a dir is set)
-    from bi_etl_and_integration_spark.operators.common import materialize
     local = materialize(local)
     totals = (local.groupBy("__pid")
               .agg(F.max("__lcum").alias("__ptot"))

@@ -470,9 +470,9 @@ def q07(spark, cat):
     # an unreleased multicast would accumulate in executor storage)
     rel_ops.release_multicasts(spark)
     # from_json parses props ONCE (get_json_object re-parses the whole
-    # string per call) and the small-input adapter keeps the parse off
-    # a single thread when the fixture is one row group
-    ev = rel_ops.ensure_min_parallelism(cat.events).withColumn(
+    # string per call) and the input spread keeps the parse off a
+    # single thread when a large events file is one row group
+    ev = rel_ops.spread_for_compute(cat.events, "event_id").withColumn(
         "k_str", F.from_json("props", "k string").getField("k"))
     # two downstream consumers (ok-count + quarantine-count) -> SSIS
     # Multicast persist-on-fanout: the parse runs once, not per branch
@@ -1560,7 +1560,7 @@ def q35(spark, cat):
    " CAST(COUNT(CASE WHEN TRY_CAST(event_type AS INT) IS NULL THEN 1 END) "
    "<= GREATEST(1000, 0.1*COUNT(*)) AS INT) AS within_tolerance FROM events")
 def q36(spark, cat):
-    ev = rel_ops.ensure_min_parallelism(cat.events)
+    ev = rel_ops.spread_for_compute(cat.events, "event_id")
     n_ok = F.count(F.when(
         F.from_json("props", "k string").getField("k")
         .try_cast("int").isNotNull(), 1))
@@ -1756,7 +1756,7 @@ def prepare_session(spark, sf_dir: str) -> None:
     residue from three 32-thread shuffle writes that contaminates the
     first MEASURED samples — r11 diagnosed q14 at sf10 reading
     0.9-2.4 s depending on how the residue fell, decaying to a
-    repeatable ~1.0 s once settled (tools/r11_q14diag.py).  Separating
+    repeatable ~1.0 s once settled.  Separating
     the one-time build from per-query timing is exactly the declared
     methodology ("warm JVM, session startup excluded")."""
     cat = _catalog(spark, sf_dir)
@@ -3099,11 +3099,11 @@ def x27(spark, cat):
         .otherwise(F.concat(F.lit("?id="),
                             (F.col("doc_id") % 7).cast("string"))),
         F.lit("#sec"))
-    # ensure_min_parallelism: the canonicalization regex chain is
-    # CPU-bound and the fixture is a single small file (sf10:
-    # ~1.7 -> ~1.0 s); no-op on a real corpus scan
-    base = rel_ops.ensure_min_parallelism(
-        cat.documents.select("doc_id", "source"))
+    # the canonicalization regex chain is CPU-bound: above the 4 MB
+    # spread floor a one-file documents scan is hash-spread across the
+    # cores (sf10: ~1.7 -> ~1.0 s); no-op on a real corpus scan
+    base = rel_ops.spread_for_compute(
+        cat.documents.select("doc_id", "source"), "doc_id")
     return (base.select(
         cu_ops.canonicalize_url(messy).alias("curl"))
         .groupBy("curl")
@@ -3127,12 +3127,13 @@ def x07(spark, cat):
    "len(list_filter(STRING_SPLIT(text,' '), x -> x != '')) AS q_n_tokens "
    "FROM documents ORDER BY doc_id")
 def x08(spark, cat):
-    """Quality features; ensure_min_parallelism because the tokenize
-    pass is CPU-bound and the small-SF fixture scan yields fewer tasks
-    than cores (sf10: ~6 s -> ~3.2 s; no-op on a real corpus scan)."""
+    """Quality features; the tokenize pass is CPU-bound, so a one-file
+    documents scan above the 4 MB spread floor is hash-spread across
+    the cores first (sf10: ~6 s -> ~3.2 s; no-op on a real corpus
+    scan)."""
     feats = tx_ops.quality_features(
-        rel_ops.ensure_min_parallelism(
-            cat.documents.select("doc_id", "text")), "text")
+        rel_ops.spread_for_compute(
+            cat.documents.select("doc_id", "text"), "doc_id"), "text")
     return (feats.select("doc_id", "q_n_chars", "q_n_tokens")
             .orderBy("doc_id"))
 
@@ -3162,7 +3163,7 @@ def x09(spark, cat):
     argmax tie-break (max struct = highest hits, then lexicographically
     greatest code) matches Spark's array_max over (hits, lang)
     structs."""
-    docs = rel_ops.ensure_min_parallelism(cat.documents)
+    docs = rel_ops.spread_for_compute(cat.documents, "doc_id")
     pred = tx_ops.language_id(docs, "text")
     return (pred.groupBy("lang", "lang_pred")
             .agg(F.count(F.lit(1)).alias("n")).orderBy("lang", "lang_pred"))
@@ -3191,8 +3192,8 @@ def x14(spark, cat):
     text is carried verbatim and chunk_start is a stable re-runnable
     key.  Zero-shuffle narrow op, oracle-matched chunk for chunk."""
     return (tx_ops.chunk_documents(
-        rel_ops.ensure_min_parallelism(cat.documents), "text", "doc_id",
-                                   chunk_tokens=32, overlap_tokens=8)
+        rel_ops.spread_for_compute(cat.documents, "doc_id"), "text",
+        "doc_id", chunk_tokens=32, overlap_tokens=8)
             .orderBy("id", "chunk_start"))
 
 
@@ -3251,14 +3252,14 @@ def x13(spark, cat):
     exceeds any fixture partition's distinct-token count, making the
     sketch exact; at corpus scale the same plan degrades gracefully
     to a space-saving approximation instead of shuffling the full
-    token frequency table.  ensure_min_parallelism: the small-SF
-    fixture is a single low-row-group file whose scan yields fewer
-    tasks than cores while the counting pass is CPU-bound (sf10:
+    token frequency table.  The counting pass is CPU-bound, so a
+    one-file low-row-group documents scan above the 4 MB spread floor
+    is hash-spread across the cores before the projection (sf10:
     2.4 -> 2.0 s); a real corpus scan already exceeds core count and
-    the adapter is a no-op."""
+    the spread is a no-op."""
     return agg_ops.approx_top_tokens(
-        rel_ops.ensure_min_parallelism(cat.documents.select("text")),
-        "text", k=20, m=10_000)
+        rel_ops.spread_for_compute(cat.documents, "doc_id")
+        .select("text"), "text", k=20, m=10_000)
 
 
 @q("x12_training_pipeline",
@@ -3675,13 +3676,8 @@ def x18(spark, cat):
     the oracle restates every rule (incl. the 49-word stopword lexicon
     and the translate() punctuation map) so thresholds, guard clauses
     and rule ORDER are all certified."""
-    # spread with min_bytes=0 (r12 quiet-window per-op A/B, VERDICT
-    # r11 item 9): the token-split + stopword HOF pass wins from the
-    # fan-out even on the 0.6 MB sf0.1 fixture (0.50 -> 0.40 s,
-    # order-alternated interleave); still a no-op on production-shaped
-    # inputs via the file-count/row-group guards
     out = cu_ops.quality_filter(
-        rel_ops.spread_for_compute(cat.documents, "doc_id", min_bytes=0),
+        rel_ops.spread_for_compute(cat.documents, "doc_id"),
         "text", min_tokens=40,
         min_mean_word_len=3.8, max_mean_word_len=4.4,
         max_punct_ratio=0.2, min_stopword_ratio=0.05)
@@ -3717,7 +3713,7 @@ def x19(spark, cat):
     HOF frequency machinery on real data): duplicate-token fraction,
     duplicated-token char fraction, top-bigram fraction."""
     rep = cu_ops.repetition_features(
-        rel_ops.ensure_min_parallelism(cat.documents), "text",
+        rel_ops.spread_for_compute(cat.documents, "doc_id"), "text",
         line_sep=" ", ngram=2)
     return (rep.select(
         "doc_id",
@@ -3747,11 +3743,7 @@ def x20(spark, cat):
     8-gram with the 'benchmark' slice (doc_id < 20 stands in for a
     held-out eval set) are flagged; per-doc distinct matched-gram
     counts certified against the oracle join."""
-    # spread with min_bytes=0 (r12 A/B, VERDICT r11 item 9): the
-    # 8-gram shingle pass parallelizes, 1.08 -> 0.89 s at sf0.1;
-    # no-op on production-shaped inputs
-    docs = rel_ops.spread_for_compute(cat.documents, "doc_id",
-                                      min_bytes=0)
+    docs = rel_ops.spread_for_compute(cat.documents, "doc_id")
     bench = cat.documents.where(F.col("doc_id") < 20)
     return (cu_ops.contamination_check(docs, bench, n=8)
             .orderBy("doc_id"))
@@ -3807,7 +3799,8 @@ def x23(spark, cat):
     first occurrence is dropped, text reassembled in original order —
     certified segment-for-segment against the indexed-lambda oracle."""
     out = cu_ops.dedup_segments(
-        rel_ops.ensure_min_parallelism(cat.documents), "text", sep=" ")
+        rel_ops.spread_for_compute(cat.documents, "doc_id"), "text",
+        sep=" ")
     return out.select("doc_id", "text").orderBy("doc_id")
 
 
@@ -3833,11 +3826,7 @@ def x24(spark, cat):
     preserved (all-boilerplate docs survive empty).  The 70% threshold
     resolves to the same integer doc count on both engines (floor on
     both sides)."""
-    # spread with min_bytes=0 (r12 A/B, VERDICT r11 item 9): the token
-    # explode + reassembly passes parallelize, 1.28 -> 0.90 s at
-    # sf0.1; no-op on production-shaped inputs
-    docs = rel_ops.spread_for_compute(cat.documents, "doc_id",
-                                      min_bytes=0)
+    docs = rel_ops.spread_for_compute(cat.documents, "doc_id")
     # threshold count memoized per (session, sf_dir): the corpus size
     # is a property of the fixture, not of this run — saves a full
     # count job per execution

@@ -127,6 +127,34 @@ def test_connected_components_probe_respects_threshold(rows):
     assert all(comp[i] == 1 for i in range(1, 13))
 
 
+def test_connected_components_keeps_only_last_round_persisted(spark,
+                                                              rows):
+    """Each star round's checkpoint is released once the next round is
+    materialized; only the round backing the result stays."""
+    edges = rows([(i, i + 1) for i in range(19)], "src long, dst long")
+    jsc = spark.sparkContext._jsc
+    for _ in range(2):
+        before = jsc.getPersistentRDDs().size()
+        out = fz.connected_components(edges, small_graph_threshold=0)
+        assert {r["component"] for r in out.collect()} == {0}
+        assert jsc.getPersistentRDDs().size() - before <= 1
+
+
+def test_fuzzy_grouping_label_prop_keeps_only_last_round_persisted(
+        spark, rows):
+    """Label-propagation rounds release each superseded snapshot; only
+    the labels backing the result stay persisted."""
+    df = rows([(i, "abcdef"[: 6 - i % 2] + "x" * (i % 2)) for i in range(12)],
+              "k int, name string")
+    jsc = spark.sparkContext._jsc
+    for _ in range(2):
+        before = jsc.getPersistentRDDs().size()
+        out = fz.fuzzy_grouping(df, "k", "name", min_similarity=0.6,
+                                small_graph_threshold=0)
+        assert out.count() == 12
+        assert jsc.getPersistentRDDs().size() - before <= 1
+
+
 def test_fuzzy_grouping_star_matches_label_prop(rows):
     df = rows([(1, "abcdef"), (2, "abcdeX"), (3, "abcdXX"), (9, "zzzzzz")],
               "k int, name string")

@@ -435,7 +435,7 @@ def test_ivfadc_scan_prunes_partitions_and_columns(cat, spark, tmp_path):
         "\n".join(pushed) or rerank_plan[:2000]
 
 
-def test_shingle_explode_not_duplicated_below_exchange(cat):
+def test_shingle_explode_not_duplicated_below_exchange(cat, monkeypatch):
     """InferFiltersFromGenerate exclusion (r11, session.py): the
     explode over a computed shingle array must NOT infer a
     `size(shingles)>0` pre-filter — that filter embeds the ENTIRE
@@ -445,9 +445,11 @@ def test_shingle_explode_not_duplicated_below_exchange(cat):
     occurrence of the shingle expression (in the Project feeding the
     Generate) and no Filter mentioning it below the Exchange."""
     from bi_etl_and_integration_spark.operators import dedup as dd
-    # min_bytes=0 forces the spread on the tiny test fixture (the r12
-    # size floor would otherwise no-op it and leave nothing to assert)
-    base = (dd._spread_for_compute(cat.documents, "doc_id", min_bytes=0)
+    # a zero size floor forces the spread on the tiny test fixture
+    # (the 4 MB floor would otherwise no-op it, leaving nothing to
+    # assert)
+    monkeypatch.setattr(rel_ops, "_SPREAD_MIN_BYTES", 0)
+    base = (dd.spread_for_compute(cat.documents, "doc_id")
             .select(F.col("doc_id").alias("id"),
                     dd.hashed_shingles(F.col("text"), 3).alias("__hs")))
     plan = (base.select("id", F.explode("__hs").alias("__h"))
@@ -459,7 +461,7 @@ def test_shingle_explode_not_duplicated_below_exchange(cat):
     assert not any("arrays_zip" in ln for ln in filters), "\n".join(filters)
 
 
-def test_spread_for_compute_is_scale_adaptive(cat, spark):
+def test_spread_for_compute_is_scale_adaptive(cat, spark, monkeypatch):
     """The spread fires for single-file few-row-group sources above
     the size floor (the compute would otherwise serialize), and is a
     NO-OP (a) below the size floor, where the exchange costs more
@@ -472,8 +474,8 @@ def test_spread_for_compute_is_scale_adaptive(cat, spark):
     assert rel_ops.spread_for_compute(cat.documents, "doc_id") \
         is cat.documents
     # forcing the floor off (big-source shape) fires the spread
-    spread = rel_ops.spread_for_compute(cat.documents, "doc_id",
-                                        min_bytes=0)
+    monkeypatch.setattr(rel_ops, "_SPREAD_MIN_BYTES", 0)
+    spread = rel_ops.spread_for_compute(cat.documents, "doc_id")
     assert spread.rdd.getNumPartitions() == p  # repartitioned
     assert "repartition" in spread._jdf.queryExecution().logical() \
         .toString().lower()
@@ -482,12 +484,54 @@ def test_spread_for_compute_is_scale_adaptive(cat, spark):
     with tempfile.TemporaryDirectory() as d:
         cat.documents.repartition(p).write.mode("overwrite").parquet(d)
         many = spark.read.parquet(d)
-        assert rel_ops.spread_for_compute(many, "doc_id",
-                                          min_bytes=0) is many
+        assert rel_ops.spread_for_compute(many, "doc_id") is many
     # (c) in-memory frame already >= p partitions: no-op even with
     # the floor forced off (row-group count unknowable -> splits rule)
     mem = cat.documents.limit(50).collect()
     memdf = spark.createDataFrame(mem, cat.documents.schema) \
         .repartition(p)
-    assert rel_ops.spread_for_compute(memdf, "doc_id",
-                                      min_bytes=0) is memdf
+    assert rel_ops.spread_for_compute(memdf, "doc_id") is memdf
+
+
+def test_spread_for_compute_unreadable_footer_counts_unsplittable(
+        spark, monkeypatch, tmp_path):
+    """A one-file parquet source whose footer cannot be read must keep
+    the conservative spread.  Its split count lies (tiny split bytes
+    cut the one row group into many splits, all but one empty), so
+    only non-parquet and in-memory inputs may trust the splits."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.table({"doc_id": list(range(2000)),
+                             "text": [f"doc {i}" for i in range(2000)]}),
+                   path)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        one_file = spark.read.parquet(path)
+        p = spark.sparkContext.defaultParallelism
+        assert one_file.rdd.getNumPartitions() >= p  # the lying splits
+
+        def unreadable(*_a, **_k):
+            raise OSError("footer unreadable")
+        monkeypatch.setattr(rel_ops, "_SPREAD_MIN_BYTES", 0)
+        monkeypatch.setattr(pq, "ParquetFile", unreadable)
+        spread = rel_ops.spread_for_compute(one_file, "doc_id")
+    finally:
+        spark.conf.set(key, old)
+    assert spread is not one_file
+    assert "hashpartitioning(doc_id" in \
+        spread._jdf.queryExecution().executedPlan().toString()
+
+
+def test_text_quality_spreads_by_hash_not_round_robin(spark, monkeypatch):
+    """x08's input spread is the shared hash rule: above the size floor
+    (forced here) the plan hash-partitions on doc_id and never pays a
+    round-robin repartition's per-partition sort."""
+    from bi_etl_and_integration_spark.queries import QUERIES
+    monkeypatch.setattr(rel_ops, "_SPREAD_MIN_BYTES", 0)
+    df = QUERIES["x08_text_quality"](spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(doc_id" in plan, plan[:3000]
+    assert "RoundRobinPartitioning" not in plan, plan[:3000]

@@ -266,6 +266,19 @@ def test_bpe_train_matches_reference_and_encodes(rows):
                for t in enc[1] + enc[2])
 
 
+def test_bpe_train_distributed_leaves_nothing_persisted(spark, rows):
+    """bpe_train returns only the merge table, so every round's
+    checkpoint is released before it returns."""
+    from bi_etl_and_integration_spark.operators.text import bpe_train
+    docs = rows([(1, "low low low lower lower newest newest"),
+                 (2, "newest newest newest wider wider low")],
+                "doc_id long, text string")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert bpe_train(docs, n_merges=10, distributed=True)
+    assert jsc.getPersistentRDDs().size() - before == 0
+
+
 def test_normalize_text_nfc_control_whitespace(rows):
     from bi_etl_and_integration_spark.operators.text import (
         normalize_text)

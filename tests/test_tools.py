@@ -326,3 +326,31 @@ def test_normalized_regression_gate():
     flagged, cal = bench.normalized_regressions(
         {"a": -1.0, "new": 9.9}, {"a": 1.0}, {}, **kw)
     assert flagged == {} and cal == 1.0
+
+
+def test_bench_summary_headline_fits_driver_tail():
+    """The driver keeps the last 2,000 chars of stdout: with a full
+    180-entry ``queries`` map every scalar headline field of the
+    summary line must still land inside that tail."""
+    import importlib.util
+    import json
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(ROOT, "bench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    times = {f"x{i:03d}_some_declared_query_name": 12.345
+             for i in range(180)}
+    out = {"queries": times, "value": 79.812, "streaming_s": 6.8,
+           "sf": 0.1, "spill_mb": {"x001": 0.0},
+           "dispersion_flagged": ["x002"],
+           "regressed_vs_committed": {"x003": [1.0, 2.0, 1.0]}}
+    summary = bench.summary(out)
+    line = json.dumps(summary)
+    assert len(line) > 2000
+    tail = line[-2000:]
+    headline = [k for k in summary if k != "queries"]
+    for key in ("value", "unit", "streaming_s", "sf", "n_queries",
+                "n_errors", "spill_mb_total", "loadavg_1m"):
+        assert key in headline
+    missing = [k for k in headline if f'"{k}": ' not in tail]
+    assert not missing, f"cut from the driver's tail: {missing}"
